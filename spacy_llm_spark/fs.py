@@ -21,20 +21,29 @@ reliable ``checkpoint()`` (written to the configured checkpoint dir,
 survives executor loss). Iterative operators (connected components, LSH
 band frames, micro-batch bucketing) call it instead of hard-coding
 ``localCheckpoint``.
+
+Two helpers carry the idioms every iterative operator repeats:
+
+- ``cut_observed(df, **aggs)`` cuts lineage and returns the named
+  aggregates (default: the row count ``n``) observed DURING the cut's
+  materialization job — zero extra scans. The values are read right
+  after the eager cut, so a loop tests its fixpoint before it builds
+  the next round's plan.
+- ``VertexCodec`` encodes arbitrary-width vertex ids once to longs that
+  are monotone in vertex order, so round after round of joins and
+  aggregates hash and shuffle fixed-width keys, and min-label rules pick
+  the same vertex through the bijection; ``decode`` restores the
+  caller's ids. Integral keys are already narrow and pass through.
 """
 
 from __future__ import annotations
 
 import os
-from typing import List, Optional
+from typing import Any, Dict, List, Optional, Tuple
 
-from pyspark.sql import DataFrame, SparkSession
-
-# Optimization-round diagnostics: SPARK_GRAFT_CUT_PROFILE=1 prints one
-# stderr line per eager lineage cut (wall seconds + call site), making
-# the per-round cost of the iterative operators visible without the UI.
-# Off by default; zero overhead in the normal path.
-_CUT_PROFILE = os.environ.get("SPARK_GRAFT_CUT_PROFILE", "")
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 # ---------------------------------------------------------------------------
 # Hadoop FileSystem helpers (driver-side metadata I/O)
@@ -51,11 +60,6 @@ def _fs_path(spark: SparkSession, path: str):
 def exists(spark: SparkSession, path: str) -> bool:
     fs, p = _fs_path(spark, path)
     return bool(fs.exists(p))
-
-
-def is_dir(spark: SparkSession, path: str) -> bool:
-    fs, p = _fs_path(spark, path)
-    return bool(fs.exists(p) and fs.getFileStatus(p).isDirectory())
 
 
 def mkdirs(spark: SparkSession, path: str) -> None:
@@ -219,7 +223,11 @@ def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
 
 
 def _cut(df: DataFrame, eager: bool) -> DataFrame:
-    if _CUT_PROFILE and eager:
+    # SPARK_GRAFT_CUT_PROFILE=1 prints one stderr line per eager cut (wall
+    # seconds + call site), making the per-round cost of the iterative
+    # operators visible without the UI. Read per call, so it can be
+    # switched on in a running session; off by default.
+    if eager and os.environ.get("SPARK_GRAFT_CUT_PROFILE"):
         import sys
         import time
         import traceback
@@ -238,3 +246,66 @@ def _cut(df: DataFrame, eager: bool) -> DataFrame:
     if _LINEAGE["reliable"]:
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+def cut_observed(
+    df: DataFrame, **aggs: Column
+) -> Tuple[DataFrame, Dict[str, Any]]:
+    """Eager ``cut_lineage`` of ``df`` plus the named aggregates ``aggs``
+    (default: the row count ``n``), observed by ``df.observe`` DURING
+    the cut's materialization job — no extra scan. Returns
+    ``(cut_df, values)``; ``values`` maps each name to its value."""
+    if not aggs:
+        aggs = {"n": F.count(F.lit(1))}
+    obs = Observation()
+    cut = _cut(
+        df.observe(obs, *[col.alias(name) for name, col in aggs.items()]),
+        True,
+    )
+    return cut, obs.get
+
+
+class VertexCodec:
+    """Order-preserving long ids for one vertex set.
+
+    ``map`` is the cut ``(vertex, id)`` frame built from the one-column
+    frame of DISTINCT vertices given: ``monotonically_increasing_id``
+    over the SORTED vertices is monotone in vertex order (partition
+    index in the high bits, row position in the low bits; the
+    expression is non-deterministic, so Catalyst keeps it above the
+    sort), which lets min-label rules pick the same vertex through the
+    bijection. ``encode``/``decode`` swap named columns through one
+    inner join against ``map`` per column, keeping column order.
+
+    Integral vertex types are already fixed-width: the codec then passes
+    them through (``encode``/``decode`` return the frame unchanged) and
+    ``map`` is the lazy ``(vertex, vertex)`` projection — no job runs.
+    """
+
+    def __init__(self, vertices: DataFrame):
+        v = F.col(vertices.columns[0])
+        self.passthrough = isinstance(vertices.schema[0].dataType, IntegralType)
+        if self.passthrough:
+            self.map = vertices.select(v.alias("vertex"), v.alias("id"))
+        else:
+            self.map = _cut(
+                vertices.orderBy(v).select(
+                    v.alias("vertex"), F.monotonically_increasing_id().alias("id")
+                ),
+                True,
+            )
+
+    def encode(self, df: DataFrame, *cols: str) -> DataFrame:
+        return self._swap(df, cols, "vertex", "id")
+
+    def decode(self, df: DataFrame, *cols: str) -> DataFrame:
+        return self._swap(df, cols, "id", "vertex")
+
+    def _swap(self, df: DataFrame, cols, key: str, value: str) -> DataFrame:
+        if self.passthrough:
+            return df
+        for c in cols:
+            keep = [F.col("__codec").alias(x) if x == c else x for x in df.columns]
+            pair = self.map.select(F.col(key).alias(c), F.col(value).alias("__codec"))
+            df = df.join(pair, c).select(*keep)
+        return df

@@ -23,10 +23,10 @@ from __future__ import annotations
 
 import logging
 
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..fs import cut_lineage
+from ..fs import VertexCodec, cut_lineage, cut_observed
 from ..kb import NIL
 
 logger = logging.getLogger(__name__)
@@ -264,46 +264,22 @@ def connected_components(
         .distinct()
     )
     all_nodes = cut_lineage(all_nodes)
-    # ORDER-PRESERVING dictionary encoding for the star rounds (guide
-    # §2.3 narrower types): each round's two window sorts and the
-    # bounding distinct hash/sort/shuffle node ids several times, so
-    # arbitrary-width ids are encoded once to longs that are monotone in
-    # the node order (monotonically_increasing_id over the SORTED node
-    # frame: partition index in the high bits, row position in the low
-    # bits; the expression is non-deterministic so Catalyst keeps it
-    # above the sort). Min-label arithmetic commutes with the bijection,
-    # so the decoded labels are bit-identical to the direct-id rounds —
-    # and identical to the driver union-find path's convention.
-    vmap = cut_lineage(
-        all_nodes.orderBy("node").select(
-            "node", F.monotonically_increasing_id().alias("_nid")
-        )
-    )
-    enc_edges = (
-        edges.join(vmap.select(F.col("node").alias("src"),
-                               F.col("_nid").alias("_ns")), "src")
-        .join(vmap.select(F.col("node").alias("dst"),
-                          F.col("_nid").alias("_nd")), "dst")
-        .select(F.col("_ns").alias("src"), F.col("_nd").alias("dst"))
-    )
-
-    def _cut_with_signature(df: DataFrame):
-        """Lineage-cut ``df`` and return (cut_df, fixpoint signature).
-
-        The signature — (row count, order-insensitive hash fold) — is
-        collected via ``df.observe`` DURING the materialization job that
-        the eager lineage cut runs anyway, so fixpoint detection costs
-        zero extra scans per round (same df.observe trick as
-        checkpoint.run_stage)."""
-        obs = Observation()
-        observed = df.observe(
-            obs,
-            F.count(F.lit(1)).alias("cnt"),
-            F.expr("bit_xor(xxhash64(concat_ws('|', src, dst)))").alias("hsh"),
-        )
-        cut = cut_lineage(observed)
-        got = obs.get  # blocks until the materialization job reports
-        return cut, (got["cnt"], got["hsh"])
+    # each star round's two window sorts and the bounding distinct hash,
+    # sort and shuffle node ids several times, so the rounds run on
+    # order-preserving long codes (guide §2.3 narrower types): min-label
+    # arithmetic commutes with the bijection, so the decoded labels are
+    # bit-identical to the direct-id rounds — and to the driver
+    # union-find path's convention
+    codec = VertexCodec(all_nodes)
+    # NULL endpoints never reach the rounds: the encoding joins drop them,
+    # and dropna does the same for integral keys, which pass through
+    enc_edges = codec.encode(edges.select("src", "dst").dropna(), "src", "dst")
+    # fixpoint signature (row count, order-insensitive hash fold),
+    # observed during each round's lineage cut
+    signature = {
+        "cnt": F.count(F.lit(1)),
+        "hsh": F.expr("bit_xor(xxhash64(concat_ws('|', src, dst)))"),
+    }
 
     if local_contraction:
         # one narrow pass; no global distinct needed — duplicate star
@@ -316,10 +292,10 @@ def connected_components(
             .where(F.col("src") != F.col("dst"))
             .distinct()
         )
-    e, sig = _cut_with_signature(e0)
+    e, sig = cut_observed(e0, **signature)
     converged = False
     for _ in range(max_iter):
-        e, new_sig = _cut_with_signature(_star_round(e))
+        e, new_sig = cut_observed(_star_round(e), **signature)
         if new_sig == sig:
             converged = True
             break
@@ -333,14 +309,10 @@ def connected_components(
         )
 
     # fixpoint edge set = stars (node -> component min); roots map to
-    # self. Decode the internal codes back to the caller's ids (vmap is
-    # node-scale), then fill roots/singletons from all_nodes as before.
-    star_map = (
-        e.join(vmap.select(F.col("_nid").alias("src"),
-                           F.col("node").alias("_vn")), "src")
-        .join(vmap.select(F.col("_nid").alias("dst"),
-                          F.col("node").alias("_vc")), "dst")
-        .select(F.col("_vn").alias("node"), F.col("_vc").alias("component"))
+    # self. Decode to the caller's ids, then fill roots/singletons from
+    # all_nodes.
+    star_map = codec.decode(e, "src", "dst").select(
+        F.col("src").alias("node"), F.col("dst").alias("component")
     )
     return all_nodes.join(star_map, "node", "left").select(
         "node", F.coalesce("component", "node").alias("component")
@@ -432,14 +404,12 @@ def incremental_components(
     touched = cut_lineage(
         labels.join(new_nodes, "node", "left_semi").select("component").distinct()
     )
-    obs = Observation()
-    sub_stars = cut_lineage(
+    sub_stars, got = cut_observed(
         labels.join(touched, "component", "left_semi")
         .select(F.col("node").alias("src"), F.col("component").alias("dst"))
-        .observe(obs, F.count(F.lit(1)).alias("n"))
     )
     if full_recompute_fraction is not None:
-        n_sliced = obs.get["n"]  # free: observed during the lineage cut
+        n_sliced = got["n"]  # free: observed during the lineage cut
         if n_sliced > 0:
             n_total = labels.count()
             if n_total > 0 and n_sliced / n_total >= full_recompute_fraction:

@@ -287,8 +287,6 @@ def bfs_levels(
     distributed traversal the reference could not express. Mirrors the
     iterative-join discipline of ``connected_components``.
     """
-    from pyspark.sql import Observation
-
     de = (
         edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
         .where(F.col("s") != F.col("t"))
@@ -312,21 +310,19 @@ def bfs_levels(
     )
     frontier = visited.select("vertex")
     for hop in range(1, max_hops + 1):
-        obs = Observation()
-        nxt = (
+        nxt, got = fs.cut_observed(
             und.join(frontier, und["s"] == frontier["vertex"])
             .select(F.col("t").alias("vertex"))
             .distinct()
             .join(visited.select("vertex"), "vertex", "left_anti")
             .withColumn("level", F.lit(hop))
         )
-        nxt = fs.cut_lineage(nxt.observe(obs, F.count(F.lit(1)).alias("n")))
         # visited stays a PLAIN union of already-cut hop frames — its plan
         # is K checkpoint scans, so cutting it again each hop would add an
         # O(|visited|) materialization per hop (O(V·hops) total) for no
         # lineage benefit. Only the frontier (whose plan grows) is cut.
         visited = visited.unionByName(nxt)
-        if obs.get["n"] == 0:
+        if got["n"] == 0:
             break
         frontier = nxt.select("vertex")
     return visited.select("vertex", F.col("level").cast("long").alias("level"))
@@ -440,8 +436,6 @@ def k_core(
     spacy_llm/tasks/entity_linker/registry.py) cannot express corpus-
     scale graph pruning; cited for parity accounting only.
     """
-    from pyspark.sql import Observation
-
     if k < 0:
         raise ValueError(f"k must be >= 0, got {k}")
     und = fs.cut_lineage(_undirected_edges(edges, src, dst))
@@ -461,14 +455,11 @@ def k_core(
             .agg(F.count(F.lit(1)).alias("d"))
         )
         bad = deg.where(F.col("d") < k).select("v")
-        obs = Observation()
-        nxt = (
+        nxt, got = fs.cut_observed(
             und.join(bad.withColumnRenamed("v", "lo"), "lo", "left_anti")
             .join(bad.withColumnRenamed("v", "hi"), "hi", "left_anti")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
         )
-        nxt = fs.cut_lineage(nxt)
-        n_next = obs.get["n"]
+        n_next = got["n"]
         if n_next == n_edges:
             converged = True
             break
@@ -522,8 +513,6 @@ def k_truss(
     ``max_rounds``); ``support`` in the result is the triangle count
     within the final truss. Reference analogue: none; cited for parity
     accounting."""
-    from pyspark.sql import Observation
-
     if k < 2:
         raise ValueError(f"k_truss: k must be >= 2, got {k}")
     und = fs.cut_lineage(_undirected_edges(edges, src, dst))
@@ -565,11 +554,8 @@ def k_truss(
             .withColumn("support", F.coalesce("support", F.lit(0)))
             .where(F.col("support") >= need)
         )
-        obs = Observation()
-        keep = fs.cut_lineage(
-            keep.observe(obs, F.count(F.lit(1)).alias("n"))
-        )
-        n_next = obs.get["n"]
+        keep, got = fs.cut_observed(keep)
+        n_next = got["n"]
         if n_next == n_edges:
             result = keep  # supports were computed ON this final set
             break
@@ -628,19 +614,16 @@ def personalized_pagerank(
     d = float(damping)
     out_deg = e.groupBy("s").agg(F.count(F.lit(1)).alias("_outdeg"))
 
-    from pyspark.sql import Observation
-
     # the dangling mass rides each round's lineage-cut materialization
     # as a df.observe (the connected_components discipline): the old
     # per-round ``ranks.agg`` + broadcast was ONE extra job per round
     # re-scanning the rank checkpoint. Same double value either way;
     # the 10 dp quantization absorbs summation-order ulps exactly as
     # before.
-    _dm_metric = F.coalesce(
+    dm_metric = F.coalesce(
         F.sum(F.when(F.col("_outdeg").isNull(), F.col("rank"))), F.lit(0.0)
-    ).alias("dm")
-    obs = Observation()
-    ranks = fs.cut_lineage(
+    )
+    ranks, got = fs.cut_observed(
         nodes.join(out_deg, nodes["vertex"] == out_deg["s"], "left")
         .join(seed_set.withColumn("_is_seed", F.lit(True)), "vertex", "left")
         .select(
@@ -650,10 +633,10 @@ def personalized_pagerank(
             .otherwise(F.lit(0.0))
             .alias("_sw"),
         )
-        .withColumn("rank", F.round(F.col("_sw"), quantum))
-        .observe(obs, _dm_metric)
+        .withColumn("rank", F.round(F.col("_sw"), quantum)),
+        dm=dm_metric,
     )
-    dm = float(obs.get["dm"] or 0.0)
+    dm = float(got["dm"] or 0.0)
     for _ in range(iters):
         contrib = (
             ranks.where(F.col("_outdeg").isNotNull())
@@ -662,8 +645,7 @@ def personalized_pagerank(
             .groupBy(F.col("t").alias("vertex"))
             .agg(F.sum("share").alias("contrib"))
         )
-        obs = Observation()
-        ranks = fs.cut_lineage(
+        ranks, got = fs.cut_observed(
             ranks.select("vertex", "_outdeg", "_sw")
             .join(contrib, "vertex", "left")
             .select(
@@ -679,10 +661,10 @@ def personalized_pagerank(
                     ),
                     quantum,
                 ).alias("rank"),
-            )
-            .observe(obs, _dm_metric)
+            ),
+            dm=dm_metric,
         )
-        dm = float(obs.get["dm"] or 0.0)
+        dm = float(got["dm"] or 0.0)
     return ranks.select("vertex", "rank")
 
 
@@ -737,8 +719,6 @@ def hits(
         nodes.select("vertex", init.alias("hub"), init.alias("authority"))
     )
 
-    from pyspark.sql import Observation
-
     def _half_step(frame: DataFrame, in_col: str, join_on: str, group_to: str,
                    out_col: str) -> DataFrame:
         """One HITS half-step: push ``in_col`` across the edges joined on
@@ -758,16 +738,15 @@ def hits(
         broadcast, once in the main plan) — same double value either
         way (the quantization discipline absorbs the summation-order
         ulp exactly as before)."""
-        obs = Observation()
-        raw = fs.cut_lineage(
+        raw, got = fs.cut_observed(
             e.join(
                 frame.select(F.col("vertex").alias(join_on), in_col), join_on
             )
             .groupBy(F.col(group_to).alias("vertex"))
-            .agg(F.sum(in_col).alias("_raw"))
-            .observe(obs, F.coalesce(F.sum("_raw"), F.lit(0.0)).alias("_tot"))
+            .agg(F.sum(in_col).alias("_raw")),
+            tot=F.coalesce(F.sum("_raw"), F.lit(0.0)),
         )
-        tot = float(obs.get["_tot"] or 0.0)
+        tot = float(got["tot"] or 0.0)
         if tot > 0:
             norm_expr = F.coalesce("_raw", F.lit(0.0)) / F.lit(tot)
         else:
@@ -1373,8 +1352,6 @@ def shortest_paths(
     over the materialized KG is a post-materialization query it cannot
     express.
     """
-    from pyspark.sql import Observation
-
     if max_hops < 0:
         raise ValueError(f"max_hops must be >= 0, got {max_hops}")
     w = (
@@ -1405,7 +1382,6 @@ def shortest_paths(
     )
     prev = (None, None)
     for _ in range(max_hops):
-        obs = Observation()
         relaxed = (
             dist.join(e, dist["vertex"] == e["s"])
             .select(F.col("t").alias("vertex"), (F.col("dist") + F.col("w")).alias("dist"))
@@ -1415,14 +1391,10 @@ def shortest_paths(
             .groupBy("vertex")
             .agg(F.min("dist").alias("dist"))
         )
-        nxt = fs.cut_lineage(
-            nxt.observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.sum("dist").alias("total"),
-            )
+        nxt, got = fs.cut_observed(
+            nxt, n=F.count(F.lit(1)), total=F.sum("dist")
         )
-        cur = (obs.get["n"], obs.get["total"])
+        cur = (got["n"], got["total"])
         dist = nxt
         if cur == prev:
             break
@@ -1477,8 +1449,6 @@ def strongly_connected_components(
     (spacy_llm/tasks/entity_linker/registry.py); cited for parity
     accounting only.
     """
-    from pyspark.sql import Observation
-
     de = fs.cut_lineage(
         edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
         .where(F.col("s") != F.col("t"))
@@ -1489,30 +1459,13 @@ def strongly_connected_components(
         .unionByName(edges.select(F.col(dst).alias("vertex")))
         .distinct()
     )
-    # ORDER-PRESERVING dictionary encoding (guide §2.3 narrower types,
-    # the betweenness lesson): every trim/color/extract round keys its
-    # joins and aggregates on vertex ids, so arbitrary-width strings are
-    # hashed and shuffled ~dozens of times. Encode once to longs whose
-    # order matches the vertex order — monotonically_increasing_id over
-    # the SORTED node frame is monotone in that order (partition index
-    # is the high bits, row position the low bits), and the expression
-    # is non-deterministic so Catalyst never reorders it past the sort —
-    # hence min-label coloring picks the same root through the
-    # bijection, and one decode at the end restores the caller's ids
-    # bit-for-bit.
-    vmap = fs.cut_lineage(
-        live_raw.orderBy("vertex").select(
-            "vertex", F.monotonically_increasing_id().alias("_nid")
-        )
-    )
-    de = fs.cut_lineage(
-        de.join(vmap.select(F.col("vertex").alias("s"),
-                            F.col("_nid").alias("_ns")), "s")
-        .join(vmap.select(F.col("vertex").alias("t"),
-                          F.col("_nid").alias("_nt")), "t")
-        .select(F.col("_ns").alias("s"), F.col("_nt").alias("t"))
-    )
-    live_v = vmap.select(F.col("_nid").alias("vertex"))
+    # every trim/color/extract round keys its joins and aggregates on
+    # vertex ids, so they run on order-preserving long codes (guide §2.3
+    # narrower types): min-label coloring picks the same root through
+    # the bijection, and one decode at the end restores the caller's ids
+    codec = fs.VertexCodec(live_raw)
+    de = fs.cut_lineage(codec.encode(de, "s", "t"))
+    live_v = codec.map.select(F.col("id").alias("vertex"))
     n_live = live_v.count()
     done_parts: list[DataFrame] = []
     live_e = de
@@ -1539,11 +1492,8 @@ def strongly_connected_components(
             ).join(
                 cur_e.select(F.col("t").alias("vertex")), "vertex", "left_semi"
             )
-            obs = Observation()
-            cyclic = fs.cut_lineage(
-                cyclic.observe(obs, F.count(F.lit(1)).alias("n"))
-            )
-            n_cyclic = obs.get["n"]
+            cyclic, got = fs.cut_observed(cyclic)
+            n_cyclic = got["n"]
             if n_cyclic == n_live:
                 break
             done_parts.append(
@@ -1574,8 +1524,7 @@ def strongly_connected_components(
                 .groupBy("vertex")
                 .agg(F.min("color").alias("_cand"))
             )
-            obs = Observation()
-            nxt = fs.cut_lineage(
+            nxt, got = fs.cut_observed(
                 colors.withColumnRenamed("color", "_old")
                 .join(cand, "vertex", "left")
                 .select(
@@ -1584,17 +1533,11 @@ def strongly_connected_components(
                         F.col("_old"), F.coalesce("_cand", F.col("_old"))
                     ).alias("color"),
                     "_old",
-                )
-                .observe(
-                    obs,
-                    F.sum(
-                        (F.col("color") < F.col("_old")).cast("long")
-                    ).alias("changed"),
-                )
-            ).drop("_old")
-            changed = obs.get["changed"]
-            colors = nxt
-            if changed == 0:
+                ),
+                changed=F.sum((F.col("color") < F.col("_old")).cast("long")),
+            )
+            colors = nxt.drop("_old")
+            if got["changed"] == 0:
                 break
         else:
             raise RuntimeError(
@@ -1617,11 +1560,8 @@ def strongly_connected_components(
                 .drop("color")
                 .join(member.select("vertex"), "vertex", "left_anti")
             )
-            obs = Observation()
-            cand = fs.cut_lineage(
-                cand.observe(obs, F.count(F.lit(1)).alias("n"))
-            )
-            if obs.get["n"] == 0:
+            cand, got = fs.cut_observed(cand)
+            if got["n"] == 0:
                 break
             member = member.unionByName(cand)
             frontier = cand
@@ -1630,13 +1570,10 @@ def strongly_connected_components(
                 f"scc: extraction did not converge within max_iter={max_iter}"
             )
         done_parts.append(member)
-        obs = Observation()
-        live_v = fs.cut_lineage(
-            live_v.join(member.select("vertex"), "vertex", "left_anti").observe(
-                obs, F.count(F.lit(1)).alias("n")
-            )
+        live_v, got = fs.cut_observed(
+            live_v.join(member.select("vertex"), "vertex", "left_anti")
         )
-        n_live = obs.get["n"]
+        n_live = got["n"]
         live_e = fs.cut_lineage(_restrict(live_e, live_v))
     if n_live > 0:
         raise RuntimeError(
@@ -1645,28 +1582,24 @@ def strongly_connected_components(
             "the budget); raise max_rounds"
         )
     if not done_parts:  # empty edge frame: typed empty result
-        return vmap.select("vertex", F.col("vertex").alias("scc")).limit(0)
+        return codec.map.select("vertex", F.col("vertex").alias("scc")).limit(0)
     out = done_parts[0]
     for part in done_parts[1:]:
         out = out.unionByName(part)
-    # decode the internal vertex codes back to the caller's ids (one
-    # join per column; vmap is node-scale)
-    return (
-        out.join(vmap.select(F.col("_nid").alias("vertex"),
-                             F.col("vertex").alias("_v")), "vertex")
-        .join(vmap.select(F.col("_nid").alias("scc"),
-                          F.col("vertex").alias("_c")), "scc")
-        .select(F.col("_v").alias("vertex"), F.col("_c").alias("scc"))
-    )
+    return codec.decode(out, "vertex", "scc")
 
 
 # transitive_closure strategy switch (driver-known INPUT count, so the
 # choice is deterministic and never changes the result set): below this
 # many distinct edges the classic one-job-per-round squaring wins on
-# latency (schema/ontology hierarchies close in 2-3 trivial rounds);
-# above it the smart P/T recurrence wins on join volume — squaring a
-# closed 200-cycle re-derives 200^3 join rows per round, the smart form
-# 200^2 (before/after numbers in OPTIMIZATION_r06.md).
+# latency (schema/ontology hierarchies close in 2-3 trivial rounds, with
+# no vertex encoding); above it the smart P/T recurrence wins on join
+# volume — squaring a closed 200-cycle re-derives 200^3 join rows per
+# round, the smart form 200^2 (before/after numbers in
+# OPTIMIZATION_r06.md). Re-measured against the smart path + vertex
+# encoding for the small string-keyed schema closures (bench_extra.py
+# shapes, 4-core host): with this branch rdfs_entailment is 0.4-1.0 s
+# faster (gate table in CHANGES.md).
 _SMART_TC_MIN_PAIRS = 1024
 
 
@@ -1721,6 +1654,8 @@ def transitive_closure(
       distance 2^i + 1 would itself be a new pair). Both frames ride
       ONE tagged union-distinct job per round (the tag keys the
       distinct, so T and P dedup independently in one shuffle).
+      Vertices that are not integers are encoded once to long codes
+      (``fs.VertexCodec``) and only the final closure is decoded.
 
     Scale note: the closure is output-bound — a single giant cycle of
     n vertices closes to n^2 pairs, so this is an operator for
@@ -1731,8 +1666,6 @@ def transitive_closure(
     reference's in-memory KB (spacy_llm/tasks/entity_linker/
     registry.py) has no graph expansion; cited for parity accounting.
     """
-    from pyspark.sql import Observation
-
     reach = fs.cut_lineage(edges.select(src, dst).distinct())
     n_pairs = reach.count()
     if n_pairs == 0:
@@ -1741,64 +1674,26 @@ def transitive_closure(
         for _ in range(max_rounds):
             left = reach.withColumnRenamed(dst, "__mid")
             right = reach.withColumnRenamed(src, "__mid")
-            obs = Observation()
-            nxt = (
+            nxt, got = fs.cut_observed(
                 left.join(right, "__mid")
                 .select(src, dst)
                 .unionByName(reach)
                 .distinct()
-                .observe(obs, F.count(F.lit(1)).alias("n"))
             )
-            nxt = fs.cut_lineage(nxt)
-            n_next = obs.get["n"]
-            if n_next == n_pairs:
+            if got["n"] == n_pairs:
                 return nxt
-            reach, n_pairs = nxt, n_next
+            reach, n_pairs = nxt, got["n"]
     else:
-        # the per-round tagged distinct hashes and shuffles every pair
-        # key for every round; when keys are not already fixed-width
-        # integers (strings, structs), dictionary-encode the VERTICES
-        # once (vertex-scale, bijective, internal to this run) so the
-        # multi-million-pair rounds run on longs, and decode only the
-        # final closure (guide §2.3 "narrower types")
-        vtype = reach.schema[src].dataType.simpleString()
-        encode = vtype not in (
-            "tinyint", "smallint", "int", "bigint"
+        # the per-round tagged distinct hashes and shuffles every pair key
+        # for every round, so the rounds run on vertex codes (guide §2.3
+        # "narrower types") and only the final closure is decoded
+        codec = fs.VertexCodec(
+            reach.select(F.col(src).alias("v"))
+            .union(reach.select(F.col(dst).alias("v")))
+            .distinct()
         )
-        if encode:
-            verts = fs.cut_lineage(
-                reach.select(F.col(src).alias("__v"))
-                .union(reach.select(F.col(dst).alias("__v")))
-                .distinct()
-                .select("__v", F.monotonically_increasing_id().alias("__c"))
-            )
-            orig_src, orig_dst = src, dst
-            src, dst = "__cs", "__cd"
-            reach = fs.cut_lineage(
-                reach.join(
-                    verts.select(F.col("__v").alias(orig_src),
-                                 F.col("__c").alias("__cs")), orig_src
-                ).join(
-                    verts.select(F.col("__v").alias(orig_dst),
-                                 F.col("__c").alias("__cd")), orig_dst
-                ).select("__cs", "__cd")
-            )
-
-        def _decode(pairs_df: DataFrame) -> DataFrame:
-            if not encode:
-                return pairs_df
-            return (
-                pairs_df.join(
-                    verts.select(F.col("__c").alias("__cs"),
-                                 F.col("__v").alias(orig_src)), "__cs"
-                )
-                .join(
-                    verts.select(F.col("__c").alias("__cd"),
-                                 F.col("__v").alias(orig_dst)), "__cd"
-                )
-                .select(orig_src, orig_dst)
-            )
-
+        if not codec.passthrough:
+            reach = fs.cut_lineage(codec.encode(reach, src, dst))
         exact = reach  # paths of length exactly 2^i; i = 0 at entry
         for _ in range(max_rounds):
             p_left = exact.withColumnRenamed(dst, "__mid")
@@ -1815,22 +1710,15 @@ def transitive_closure(
                 .select(src, dst)
                 .withColumn("__t", F.lit(False))
             )
-            obs = Observation()
-            tagged = (
-                t_next.unionByName(p_next)
-                .distinct()
-                .observe(
-                    obs,
-                    F.sum(F.col("__t").cast("long")).alias("n"),
-                )
+            tagged, got = fs.cut_observed(
+                t_next.unionByName(p_next).distinct(),
+                n=F.sum(F.col("__t").cast("long")),
             )
-            tagged = fs.cut_lineage(tagged)
-            n_next = obs.get["n"]
-            if n_next == n_pairs:
-                return _decode(tagged.where("__t").select(src, dst))
             reach = tagged.where("__t").select(src, dst)
+            if got["n"] == n_pairs:
+                return codec.decode(reach, src, dst)
             exact = tagged.where(~F.col("__t")).select(src, dst)
-            n_pairs = n_next
+            n_pairs = got["n"]
     raise RuntimeError(
         f"transitive_closure: not converged within max_rounds={max_rounds} "
         f"doubling rounds (reachability depth > 2^{max_rounds}); raise "
@@ -3335,8 +3223,6 @@ def betweenness(
 
     Reference analogue: none — cited for parity accounting.
     """
-    from pyspark.sql import Observation
-
     if max_hops < 1:
         raise ValueError(f"betweenness: max_hops must be >= 1, got {max_hops}")
     if directed:
@@ -3348,61 +3234,41 @@ def betweenness(
         )
     adj = adj.where(F.col("u") != F.col("v")).distinct()
     adj = fs.cut_lineage(adj)
-    nodes_raw = (
+    # ~2·eccentricity rounds of (source, vertex)-keyed joins/aggregates
+    # follow; they run on vertex codes (guide §2.3 "narrower types") —
+    # a bijection, so sigma counts, level sets and the quantized delta
+    # sums are unchanged
+    codec = fs.VertexCodec(
         adj.select(F.col("u").alias("vertex"))
         .unionByName(adj.select(F.col("v").alias("vertex")))
         .distinct()
     )
-    # ~2·eccentricity rounds of (source, vertex)-keyed joins/aggregates
-    # follow; hashing and shuffling long keys instead of arbitrary-width
-    # vertex strings cuts every round's bytes and hash cost (guide §2.3
-    # "narrower types"), so vertices are dictionary-encoded ONCE up
-    # front and decoded once at the end. The code is internal to this
-    # run (monotonically_increasing_id over the cut nodes frame, itself
-    # cut so it never re-derives) — a bijection, so sigma counts, level
-    # sets and the quantized delta sums are unchanged.
-    vmap = fs.cut_lineage(
-        nodes_raw.select("vertex", F.monotonically_increasing_id().alias("_nid"))
-    )
-    adj = fs.cut_lineage(
-        adj.join(vmap.select(F.col("vertex").alias("u"),
-                             F.col("_nid").alias("_nu")), "u")
-        .join(vmap.select(F.col("vertex").alias("v"),
-                          F.col("_nid").alias("_nv")), "v")
-        .select(F.col("_nu").alias("u"), F.col("_nv").alias("v"))
-    )
-    nodes = vmap.select(F.col("_nid").alias("vertex"))
+    adj = fs.cut_lineage(codec.encode(adj, "u", "v"))
     seed_col = sources.columns[0]
     level0 = fs.cut_lineage(
-        sources.select(F.col(seed_col).alias("s"))
-        .distinct()
-        .join(vmap.withColumnRenamed("vertex", "s"), "s")
-        .select(
-            F.col("_nid").alias("s"),
-            F.col("_nid").alias("v"),
-            F.lit(1).cast("long").alias("sigma"),
+        codec.encode(
+            sources.select(F.col(seed_col).alias("s")).distinct(), "s"
+        ).select(
+            "s", F.col("s").alias("v"), F.lit(1).cast("long").alias("sigma")
         )
     )
     levels = [level0]
     visited = level0.select("s", "v")
     for hop in range(1, max_hops + 2):
         prev = levels[-1]
-        obs = Observation()
         # aggregate sigma BEFORE the visited anti-join: a visited (s, v)
         # loses ALL its expanded rows either way, so filtering after the
         # sum is the same set — but the anti-join input shrinks from
         # expanded-edge scale to frontier scale and reuses the groupBy's
         # (s, v) hash partitioning instead of forcing its own exchange.
-        nxt = (
+        nxt, got = fs.cut_observed(
             prev.join(adj, prev["v"] == adj["u"])
             .select("s", adj["v"].alias("v"), "sigma")
             .groupBy("s", "v")
             .agg(F.sum("sigma").alias("sigma"))
             .join(visited, ["s", "v"], "left_anti")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
         )
-        nxt = fs.cut_lineage(nxt)
-        if obs.get["n"] == 0:
+        if got["n"] == 0:
             break
         if hop > max_hops:
             # frontier still alive past max_hops: deeper shortest paths
@@ -3454,7 +3320,7 @@ def betweenness(
         if lvl >= 1:  # sources accumulate nothing
             deltas.append(delta_next.select("v", "delta"))
     if not deltas:
-        return vmap.select("vertex", F.lit(0.0).alias("betweenness"))
+        return codec.map.select("vertex", F.lit(0.0).alias("betweenness"))
     acc = deltas[0]
     for d in deltas[1:]:
         acc = acc.unionByName(d)
@@ -3464,8 +3330,9 @@ def betweenness(
     bc = acc.groupBy("v").agg(
         F.round(F.sum("delta") * F.lit(half), 6).alias("betweenness")
     )
-    # decode the internal vertex code back to the caller's ids
-    return vmap.join(bc, vmap["_nid"] == bc["v"], "left").select(
+    # decode through the map's left side: vertices no shortest path
+    # passes through score 0.0
+    return codec.map.join(bc, codec.map["id"] == bc["v"], "left").select(
         "vertex", F.coalesce("betweenness", F.lit(0.0)).alias("betweenness")
     )
 
@@ -3538,8 +3405,6 @@ def harmonic_centrality(
 
     Reference analogue: none — cited for parity accounting.
     """
-    from pyspark.sql import Observation
-
     if max_hops < 1:
         raise ValueError(
             f"harmonic_centrality: max_hops must be >= 1, got {max_hops}"
@@ -3567,15 +3432,13 @@ def harmonic_centrality(
     visited = frontier
     contribs = []
     for hop in range(1, max_hops + 1):
-        obs = Observation()
-        frontier = fs.cut_lineage(
+        frontier, got = fs.cut_observed(
             frontier.join(adj, frontier["v"] == adj["u"])
             .select("s", adj["v"].alias("v"))
             .distinct()
             .join(visited, ["s", "v"], "left_anti")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
         )
-        if obs.get["n"] == 0:
+        if got["n"] == 0:
             break
         visited = fs.cut_lineage(visited.unionByName(frontier))
         contribs.append(
@@ -3636,8 +3499,6 @@ def hyperball(
 
     Reference analogue: none — cited for parity accounting.
     """
-    from pyspark.sql import Observation
-
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     if not directed:
         e = e.unionByName(
@@ -3663,27 +3524,19 @@ def hyperball(
         F.hll_sketch_agg("node", F.lit(lg_k)).alias("ball")
     )
 
-    def _cut_with_signature(df: DataFrame):
-        obs = Observation()
-        # the signature folds PER-NODE estimates, not sketch bytes:
-        # DataSketches' sparse-mode serialization is insertion-order-
-        # dependent, so byte equality never stabilizes across rounds —
-        # estimate stability per vertex is the practical HyperBall stop
-        # rule (and the documented early-stop caveat's actual boundary)
-        observed = df.observe(
-            obs,
-            F.count(F.lit(1)).alias("cnt"),
-            F.expr(
-                "bit_xor(xxhash64(node, hll_sketch_estimate(ball)))"
-            ).alias("hsh"),
-            F.sum(F.hll_sketch_estimate("ball")).alias("est"),
-        )
-        cut = fs.cut_lineage(observed)
-        got = obs.get
-        return cut, (got["cnt"], got["hsh"]), got["est"]
-
-    balls, sig, est = _cut_with_signature(balls)
-    curve = [(0, int(est))]
+    # the fixpoint signature folds PER-NODE estimates, not sketch bytes:
+    # DataSketches' sparse-mode serialization is insertion-order-
+    # dependent, so byte equality never stabilizes across rounds —
+    # estimate stability per vertex is the practical HyperBall stop
+    # rule (and the documented early-stop caveat's actual boundary)
+    signature = {
+        "cnt": F.count(F.lit(1)),
+        "hsh": F.expr("bit_xor(xxhash64(node, hll_sketch_estimate(ball)))"),
+        "est": F.sum(F.hll_sketch_estimate("ball")),
+    }
+    balls, got = fs.cut_observed(balls, **signature)
+    sig = (got["cnt"], got["hsh"])
+    curve = [(0, int(got["est"]))]
     for t in range(1, max_t + 1):
         contrib = e.join(balls, e["dst"] == balls["node"]).select(
             F.col("src").alias("node"), "ball"
@@ -3691,13 +3544,14 @@ def hyperball(
         merged = balls.unionByName(contrib).groupBy("node").agg(
             F.hll_union_agg("ball").alias("ball")
         )
-        merged, new_sig, est = _cut_with_signature(merged)
+        merged, got = fs.cut_observed(merged, **signature)
+        new_sig = (got["cnt"], got["hsh"])
         if new_sig == sig:
             spark = edges.sparkSession
             nf = spark.createDataFrame(curve, "t int, n_pairs_estimate long")
             return (nf, merged) if return_balls else nf
         balls, sig = merged, new_sig
-        curve.append((t, int(est)))
+        curve.append((t, int(got["est"])))
     raise RuntimeError(
         f"hyperball: not converged within max_t={max_t} rounds"
     )
@@ -4401,8 +4255,6 @@ def _topological_levels_doubling(
     distinct, self-loop-free (s, t) edge set."""
     import math
 
-    from pyspark.sql import Observation
-
     all_v = fs.cut_lineage(
         rem.select(F.col("s").alias("v"))
         .union(rem.select(F.col("t").alias("v")))
@@ -4421,24 +4273,18 @@ def _topological_levels_doubling(
         right = d.select(
             F.col("s").alias("__m"), F.col("t"), F.col("len").alias("__lr")
         )
-        obs = Observation()
-        nxt = (
+        nxt, got = fs.cut_observed(
             d.unionByName(
                 left.join(right, "__m").select(
                     "s", "t", (F.col("__ll") + F.col("__lr")).alias("len")
                 )
             )
             .groupBy("s", "t")
-            .agg(F.max("len").alias("len"))
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.sum("len").alias("sl"),
-                F.max("len").alias("ml"),
-            )
+            .agg(F.max("len").alias("len")),
+            n=F.count(F.lit(1)),
+            sl=F.sum("len"),
+            ml=F.max("len"),
         )
-        nxt = fs.cut_lineage(nxt)
-        got = obs.get
         if got["ml"] >= n_v:
             # pigeonhole: a walk of length >= |V| repeats a vertex
             raise ValueError(
@@ -4529,8 +4375,6 @@ def topological_levels(
     spacy_llm/tasks/entity_linker/registry.py) cannot express
     corpus-scale dependency layering; cited for parity accounting only.
     """
-    from pyspark.sql import Observation
-
     rem = fs.cut_lineage(
         edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
         .where(F.col("s") != F.col("t"))
@@ -4563,12 +4407,10 @@ def topological_levels(
             return assigned.select("v", "level").withColumnRenamed(
                 "v", "vertex"
             )
-        obs = Observation()
-        nxt = rem.join(
-            cut_layer.select(F.col("v").alias("s")), "s", "left_anti"
-        ).observe(obs, F.count(F.lit(1)).alias("n"))
-        nxt = fs.cut_lineage(nxt)
-        n_next = obs.get["n"]
+        nxt, got = fs.cut_observed(
+            rem.join(cut_layer.select(F.col("v").alias("s")), "s", "left_anti")
+        )
+        n_next = got["n"]
         if n_next == n_edges:
             # nobody peeled but edges remain -> cycle
             raise ValueError(
@@ -4630,8 +4472,6 @@ def minimum_spanning_forest(
     spacy_llm/tasks/entity_linker/registry.py) cannot express
     corpus-scale spanning structure; cited for parity accounting only.
     """
-    from pyspark.sql import Observation
-
     from .canonicalize import connected_components
 
     # NOTE (r06): an order-preserving long encoding of the endpoints was
@@ -4679,9 +4519,8 @@ def minimum_spanning_forest(
             .select("p.*")
             .distinct()  # both endpoints picking the same edge collapse
         )
-        obs = Observation()
-        sel = fs.cut_lineage(sel.observe(obs, F.count(F.lit(1)).alias("n")))
-        if obs.get["n"] == 0:
+        sel, got = fs.cut_observed(sel)
+        if got["n"] == 0:
             return _decode(forest_parts)
         forest_parts.append(sel.select("lo", "hi", F.col("w").alias(weight)))
         cc = connected_components(

@@ -167,8 +167,6 @@ def transe_epoch(
     """
     if lr <= 0 or margin <= 0:
         raise ValueError(f"lr and margin must be > 0, got {lr}, {margin}")
-    from pyspark.sql import Observation
-
     # cut the ENTITY table once: ``ent`` feeds THREE scoring joins plus
     # the final apply join, and callers routinely hand in a lazy
     # init/distinct plan that would otherwise re-run per reference.
@@ -191,20 +189,16 @@ def transe_epoch(
     # the missing-id guard rides the scored frame's own lineage-cut job
     # (df.observe — zero extra scans) instead of a second full pass
     # through the four joins and the distance folds
-    obs = Observation()
-    scored = fs.cut_lineage(
-        scored.observe(
-            obs,
-            F.sum(
-                (
-                    F.col("_h").isNull() | F.col("_r").isNull()
-                    | F.col("_t").isNull() | F.col("_tn").isNull()
-                ).cast("long")
-            ).alias("n_missing"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
+    scored, got = fs.cut_observed(
+        scored,
+        n_missing=F.sum(
+            (
+                F.col("_h").isNull() | F.col("_r").isNull()
+                | F.col("_t").isNull() | F.col("_tn").isNull()
+            ).cast("long")
+        ),
+        n_rows=F.count(F.lit(1)),
     )
-    got = obs.get
     n_missing = int(got["n_missing"] or 0) if got["n_rows"] else 0
     if n_missing:
         raise ValueError(

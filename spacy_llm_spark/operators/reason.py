@@ -54,7 +54,7 @@ it); cited for parity accounting only.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import fs
@@ -600,16 +600,11 @@ def entailment_fixpoint(
         )
         # round count + next round's slice certificate in the SAME
         # materialization job as the lineage cut
-        obs = Observation(f"entailment_fixpoint_{i}")
-        owl_df = owl_df.observe(
-            obs,
-            F.count(F.lit(1)).alias("m"),
-            F.sum(
-                F.col("pred").isin(trans_preds).cast("long")
-            ).alias("slice_rows"),
+        nxt, got = fs.cut_observed(
+            owl_df,
+            m=F.count(F.lit(1)),
+            slice_rows=F.sum(F.col("pred").isin(trans_preds).cast("long")),
         )
-        nxt = fs.cut_lineage(owl_df)
-        got = obs.get
         m = got["m"]
         # the OWL output's transitive slice IS its closure output (the
         # mirrored inputs are a subset of the closed pairs) — its count

@@ -76,18 +76,6 @@ def score_cats(
     return prf(tp, pred_pos.count(), gold_pos.count())
 
 
-def score_triples(
-    predicted: DataFrame,
-    gold: DataFrame,
-    keys: Sequence[str] = ("doc_id", "subj", "pred", "obj"),
-) -> Tuple[float, float, float]:
-    """Triple-level P/R/F — the BASELINE.json >=0.95 parity metric."""
-    p = predicted.select(*keys).distinct()
-    g = gold.select(*keys).distinct()
-    tp = p.join(g, on=list(keys), how="inner").count()
-    return prf(tp, p.count(), g.count())
-
-
 def pairwise_cluster_prf(
     assign: DataFrame,
     pred_col: str,

@@ -50,29 +50,6 @@ def salted_agg(
     )
 
 
-def salted_count(df: DataFrame, keys: Sequence[str], n_salt: int = 16) -> DataFrame:
-    """Salted row count per key -> (keys..., n_rows)."""
-    return salted_agg(df, keys, {"n_rows": (F.count(F.lit(1)), F.sum)}, n_salt)
-
-
-def with_salt(df: DataFrame, key: str, n_salt: int = 16) -> DataFrame:
-    """Attach a deterministic salt column for salted repartitioning:
-    ``repartition(keys + salt)`` spreads a hot key over n_salt tasks.
-    Deterministic (hash of a second column set) so resume runs place rows
-    identically.
-    """
-    return df.withColumn("_salt", F.pmod(F.xxhash64(*df.columns), F.lit(n_salt)))
-
-
-def repartition_salted(
-    df: DataFrame, key: str, n_partitions: int, n_salt: int = 16
-) -> DataFrame:
-    """Repartition by (key, salt) to break a hot key across tasks."""
-    salted = with_salt(df, key, n_salt)
-    out = salted.repartition(n_partitions, F.col(key), F.col("_salt"))
-    return out.drop("_salt")
-
-
 def skew_report(
     df: DataFrame,
     key_cols: Sequence[str],

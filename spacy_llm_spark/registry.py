@@ -23,14 +23,6 @@ _TASKS: Dict[str, Callable[..., DataFrame]] = {}
 _MISC: Dict[str, Callable] = {}
 
 
-def register_task(name: str):
-    def deco(factory):
-        _TASKS[name] = factory
-        return factory
-
-    return deco
-
-
 def get_task(name: str):
     if name not in _TASKS:
         raise KeyError(f"Unknown task '{name}'. Registered: {sorted(_TASKS)}")

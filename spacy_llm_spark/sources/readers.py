@@ -13,11 +13,6 @@ from pathlib import Path
 from typing import List, Union
 
 
-def file_reader(path: Union[str, Path]) -> str:
-    """S2: read a template file as a string (registry/reader.py:8-19)."""
-    return Path(path).read_text()
-
-
 def fewshot_reader(path: Union[str, Path]) -> List[dict]:
     """S1: read few-shot examples, trying the format implied by the suffix
     first, then the others (registry/reader.py:22-87). Returns a list of
